@@ -21,6 +21,18 @@ def test_no_false_negatives(spark):
     assert probed.filter(~F.col("bloom_hit")).count() == 0
 
 
+def test_duplicate_probe_key_still_hits(spark):
+    seen = spark.createDataFrame([("a",), ("b",), ("c",)], ["url"])
+    probes = spark.createDataFrame([("a",), ("a",), ("b",)], ["url"])
+    sketch = bloom_build(seen, "url", m_bits=M, k=K)
+    got = bloom_probe(sketch, probes, "url", m_bits=M, k=K).collect()
+    assert sorted((r.url, r.bloom_hit) for r in got) == [
+        ("a", True),
+        ("a", True),
+        ("b", True),
+    ]
+
+
 def test_unseen_mostly_miss_and_fp_bounded(spark):
     sketch = bloom_build(_keys(spark, 0, 300), "url", m_bits=M, k=K)
     unseen = _keys(spark, 10_000, 11_000)

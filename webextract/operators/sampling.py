@@ -708,8 +708,9 @@ def bloom_probe(
     """Probe keys against a built filter → probes + ``bloom_hit``
     (true iff ALL k bits are set). A LEFT join on word_idx keeps keys
     whose words are entirely absent from the filter (guaranteed miss);
-    the hit test is ``count(bit set) == k`` per key — pure JVM bit
-    arithmetic, no Python."""
+    the hit test is "every probed bit is set" per key (``bool_and``, so
+    a key probed more than once still hits) — pure JVM bit arithmetic,
+    no Python."""
     pos = bloom_positions(probes, key_col, k, m_bits)
     hits = (
         pos.join(sketch, "word_idx", "left")
@@ -719,10 +720,6 @@ def bloom_probe(
             & (F.col("bits").bitwiseAND(F.col("mask")) == F.col("mask")),
         )
         .groupBy(key_col)
-        .agg(
-            (F.sum(F.col("bit_set").cast("int")) == F.lit(k)).alias(
-                "bloom_hit"
-            )
-        )
+        .agg(F.bool_and("bit_set").alias("bloom_hit"))
     )
     return probes.join(hits, key_col)
