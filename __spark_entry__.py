@@ -480,17 +480,9 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEADLINE simhash signatures: the production 64-bit width (four
     16-bit band columns — the join key layout of the banded Hamming
-    dedup). A 16-bit signature saturates by pigeonhole at ≥10^6 docs;
-    the demo-width variant survives test-pinned only
-    (dedup.simhash_signatures; its registry demo was pruned in r4)."""
+    dedup). A 16-bit signature saturates by pigeonhole at ≥10^6 docs,
+    so 64 bits is the only width."""
     return dedup.simhash64_bands(_docs_spread(spark, sf_dir))
-
-
-def q_simhash16_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash (DEMO width — saturates at corpus scale; kept as
-    the minimal oracle-transparent illustration of the bit-vote
-    construction, never for production dedup)."""
-    return dedup.simhash_signatures(_docs_spread(spark, sf_dir))
 
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2416,29 +2408,6 @@ _BANDS_UNION = "\n    UNION ALL\n    ".join(
     )
     for b in range(dedup.LSH_BANDS)
 )
-
-
-def _simhash_sql() -> str:
-    digit_cols = ",\n      ".join(
-        f"CAST(('0x' || substr(md5(t), {p + 1}, 1)) AS INTEGER) AS d{p}"
-        for p in range(dedup.SIMHASH_HEX)
-    )
-    votes = []
-    sig_terms = []
-    for p in range(dedup.SIMHASH_HEX):
-        for shift in (3, 2, 1, 0):
-            idx = p * 4 + (3 - shift)
-            div = 1 << shift
-            votes.append(f"SUM(((d{p} // {div}) % 2) * 2 - 1) AS v{idx}")
-            sig_terms.append(f"(CASE WHEN v{idx} > 0 THEN {1 << idx} ELSE 0 END)")
-    return f"""
-WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-  d AS (SELECT doc_id,
-      {digit_cols}
-    FROM tok),
-  v AS (SELECT doc_id, {", ".join(votes)} FROM d GROUP BY doc_id)
-SELECT doc_id, CAST({" + ".join(sig_terms)} AS INTEGER) AS simhash FROM v
-"""
 
 
 def _line_dedup_cte(src: str) -> str:

@@ -61,7 +61,8 @@ def test_table_pre_and_footer_heading(spark):
 
 def test_block_facts_agree_with_extraction(spark):
     """Keep decisions in the layout view match extraction's kept spans
-    (same decode→tokenize→score front-end)."""
+    (same page front-end, then score, under the same config)."""
+    from webextract.config import ExtractConfig
     from webextract.operators.extract import extract_pages
     from webextract.sources.pages import _TPL_HEAD, _TPL_MID, _TPL_TAIL
 
@@ -70,17 +71,26 @@ def test_block_facts_agree_with_extraction(spark):
         "keeps it comfortably above the drop threshold."
     )
     html = _TPL_HEAD + "Doc 1 from x" + _TPL_MID + body + _TPL_TAIL
-    pages = _pages(spark, [("u", html)])
-    kept_layout = {
-        r.block_id
-        for r in block_facts(pages).filter(F.col("is_kept")).collect()
-    }
-    kept_extract = {
-        s.block_id
-        for s in extract_pages(pages).select(F.explode("spans").alias("s"))
-        .select("s.block_id").collect()
-    }
-    assert kept_layout == kept_extract
+    # double-encoded UTF-8: scored raw it is kept (0.506); repaired by
+    # the mojibake step it is half as long and dropped (0.499)
+    moji = "<ul><li>éééééé</li></ul>".encode().decode("latin-1").encode()
+    cases = [
+        (html.encode(), ExtractConfig()),
+        (moji, ExtractConfig(fix_mojibake=True)),
+    ]
+    for raw, cfg in cases:
+        pages = spark.createDataFrame([("u", raw)], ["url", "html"])
+        kept_layout = {
+            r.block_id
+            for r in block_facts(pages, cfg).filter(F.col("is_kept")).collect()
+        }
+        kept_extract = {
+            s.block_id
+            for s in extract_pages(pages, cfg)
+            .select(F.explode("spans").alias("s"))
+            .select("s.block_id").collect()
+        }
+        assert kept_layout == kept_extract, cfg
 
 
 def test_layout_summary_rollup(spark):

@@ -5,6 +5,11 @@ The analog of ``TextSystem.__call__`` (tools/infer/predict_system.py:
 all stages into ONE function means the Spark plan crosses the
 JVM↔Python worker boundary exactly once per Arrow batch (vs the
 reference's two native-runtime crossings per image) — see SURVEY.md §4.
+
+The page front-end is shared by every HTML operator:
+:func:`read_page` (NULL, cap, decode, mojibake repair) and
+:func:`page_blocks` (+ tokenize, RTL reversal). Layout, KIE and table
+rows therefore see exactly the text and blocks extraction scores.
 """
 
 from __future__ import annotations
@@ -18,21 +23,18 @@ from webextract.functions.scorer import score_blocks
 from webextract.functions.tokenizer import tokenize_blocks
 
 
-def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
-    """Extract main content from one raw html document (total function).
+def read_page(raw: bytes | None, cfg: ExtractConfig) -> tuple[str, int, bool]:
+    """One raw html document → ``(html_text, bytes_in, truncated)``.
 
-    Returns ``{text, spans, mean_score, blocks_total, blocks_kept,
-    bytes_in, truncated}``. Never raises: empty/None/poison input yields
-    the empty result (the empty-det early-exit analog,
-    predict_system.py:79-83).
+    NULL reads as empty; bytes past ``cfg.max_html_bytes`` are cut
+    before decoding (the poison-page guard). Total: never raises.
     """
     if raw is None:
         raw = b""
     bytes_in = len(raw)
-    truncated = False
-    if bytes_in > cfg.max_html_bytes:
+    truncated = bytes_in > cfg.max_html_bytes
+    if truncated:
         raw = raw[: cfg.max_html_bytes]
-        truncated = True
     html_text = decode_html(raw)
     if cfg.fix_mojibake:
         # classify-then-correct, the cls-stage analog (predict_cls.py):
@@ -40,6 +42,15 @@ def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
         from webextract.functions.mojibake import fix_mojibake
 
         html_text = fix_mojibake(html_text)
+    return html_text, bytes_in, truncated
+
+
+def page_blocks(
+    raw: bytes | None, cfg: ExtractConfig
+) -> tuple[dict[str, list], int, bool]:
+    """One raw html document → ``(blocks, bytes_in, truncated)``: the
+    :func:`read_page` text tokenized into the columnar block table."""
+    html_text, bytes_in, truncated = read_page(raw, cfg)
     blocks = tokenize_blocks(html_text)
     if cfg.rtl_reverse:
         # per-block segment reversal BEFORE scoring/merge: lengths are
@@ -49,6 +60,18 @@ def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
         texts = [rtl_segment_reverse(t) for t in blocks["text"]]
         blocks["text"] = texts
         blocks["doc_text"] = "\n".join(texts)
+    return blocks, bytes_in, truncated
+
+
+def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
+    """Extract main content from one raw html document (total function).
+
+    Returns ``{text, spans, mean_score, blocks_total, blocks_kept,
+    bytes_in, truncated}``. Never raises: empty/None/poison input yields
+    the empty result (the empty-det early-exit analog,
+    predict_system.py:79-83).
+    """
+    blocks, bytes_in, truncated = page_blocks(raw, cfg)
     scores, keep = score_blocks(blocks, cfg)
     merged = merge_spans(blocks, scores, keep, cfg)
     merged.update(

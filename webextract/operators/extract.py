@@ -16,13 +16,17 @@ Arrow batch → write. Design points (SURVEY.md §4):
  * per-partition lineage rows (the ``time_dict`` analog,
    predict_system.py:68-119) are emitted from the same UDF as extra
    rows with a discriminator column and split afterwards — no second
-   pass over the html.
+   pass over the html;
+ * :func:`map_pages` is the one Arrow batch driver: extraction, layout
+   block facts, KIE and table cells are each a per-page row function
+   under a Spark schema, and the lineage variant reuses its builder.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from operator import itemgetter
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -30,6 +34,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.functions.extract import extract_page
@@ -70,82 +75,59 @@ UNIFIED_SCHEMA = T.StructType(
     ]
 )
 
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("urls_in", T.LongType(), True),
-        T.StructField("bytes_in", T.LongType(), True),
-        T.StructField("blocks_kept", T.LongType(), True),
-        T.StructField("extract_ms", T.DoubleType(), True),
-    ]
-)
+PageRows = Callable[[bytes | None], Iterable[tuple]]
 
 
-# Arrow output schema mirroring EXTRACTED_SCHEMA (built once; the
-# mapInArrow path constructs arrays directly — no pandas object columns,
-# which halves the per-batch ser-de cost vs mapInPandas)
-_SPAN_PA = pa.list_(
-    pa.struct(
-        [
-            ("block_id", pa.int32()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("tag", pa.string()),
-            ("score", pa.float64()),
-        ]
-    )
-)
+def _batch_builder(
+    page_rows: PageRows, schema: T.StructType
+) -> Callable[[pa.RecordBatch], pa.RecordBatch]:
+    """(url, html) batch → ``schema`` batch: each page's 0..N rows from
+    ``page_rows(html)``, each prefixed with the page url. Columns are
+    built with ``pa.array`` (no pandas objects) against the Arrow schema
+    DERIVED from the Spark one, so the two cannot drift."""
+    arrow_schema = to_arrow_schema(schema)
+    n_cols = len(schema.fields) - 1
+
+    def build(rb: pa.RecordBatch) -> pa.RecordBatch:
+        urls: list[str] = []
+        rows: list[tuple] = []
+        for url, raw in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+            n = len(rows)
+            rows.extend(page_rows(raw))
+            urls.extend([url] * (len(rows) - n))
+        cols = [urls, *(list(zip(*rows)) or [()] * n_cols)]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+
+    return build
 
 
-def _spans_array(results: list[dict]) -> pa.ListArray:
-    """spans as a ListArray built from flattened primitive columns —
-    one pass, no per-span dict objects (the hot-path shape: a 2M-page
-    batch job builds millions of spans)."""
-    offsets = [0]
-    b_ids: list[int] = []
-    starts: list[int] = []
-    ends: list[int] = []
-    tags: list[str] = []
-    scores: list[float] = []
-    n = 0
-    for r in results:
-        for (b, s, e, t, sc) in r["spans"]:
-            b_ids.append(b)
-            starts.append(s)
-            ends.append(e)
-            tags.append(t)
-            scores.append(sc)
-        n += len(r["spans"])
-        offsets.append(n)
-    struct = pa.StructArray.from_arrays(
-        [
-            pa.array(b_ids, type=pa.int32()),
-            pa.array(starts, type=pa.int32()),
-            pa.array(ends, type=pa.int32()),
-            pa.array(tags, type=pa.string()),
-            pa.array(scores, type=pa.float64()),
-        ],
-        ["block_id", "start", "end", "tag", "score"],
-    )
-    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct)
+def map_pages(
+    pages: DataFrame, page_rows: PageRows, schema: T.StructType
+) -> DataFrame:
+    """THE page operator shape: select ``(url, html)`` so Catalyst
+    prunes the scan, then ONE ``mapInArrow`` crossing in which every
+    page's html becomes ``page_rows(html)`` rows (0..N per page,
+    without the url) under ``schema``, whose field 0 is the url.
+    Extraction, layout, KIE and table recovery are all instances."""
+    build = _batch_builder(page_rows, schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows:
+                yield build(rb)
+
+    return pages.select("url", "html").mapInArrow(run, schema)
 
 
-def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
-    """One Arrow batch of (url, html) → extracted batch, all-pyarrow."""
-    results = [extract_page(h, cfg) for h in rb.column(1).to_pylist()]
-    return pa.RecordBatch.from_arrays(
-        [
-            rb.column(0),
-            pa.array([r["text"] for r in results], type=pa.string()),
-            _spans_array(results),
-            pa.array([r["mean_score"] for r in results], type=pa.float64()),
-            pa.array([r["blocks_total"] for r in results], type=pa.int32()),
-            pa.array([r["blocks_kept"] for r in results], type=pa.int32()),
-            pa.array([r["bytes_in"] for r in results], type=pa.int64()),
-            pa.array([r["truncated"] for r in results], type=pa.bool_()),
-        ],
-        [f.name for f in EXTRACTED_SCHEMA.fields],
-    )
+# extract_page's result keys in EXTRACTED_SCHEMA order (after the url)
+_page_row = itemgetter(*[f.name for f in EXTRACTED_SCHEMA.fields[1:]])
+
+
+def _extract_rows(cfg: ExtractConfig) -> PageRows:
+    return lambda raw: (_page_row(extract_page(raw, cfg)),)
 
 
 def extract_pages(
@@ -166,16 +148,9 @@ def extract_pages(
     (tools/infer/predict_rec.py:385-398): no shuffle, cheap, and evens
     out batch latency when page sizes are heavy-tailed.
     """
-    src = pages.select("url", "html")
     if sort_by_size:
-        src = src.sortWithinPartitions(F.length("html"))
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows:
-                yield _extract_record_batch(rb, cfg)
-
-    return src.mapInArrow(run, EXTRACTED_SCHEMA)
+        pages = pages.sortWithinPartitions(F.length("html"))
+    return map_pages(pages, _extract_rows(cfg), EXTRACTED_SCHEMA)
 
 
 def to_json_lines(extracted: DataFrame) -> DataFrame:
@@ -196,25 +171,11 @@ def extract_pages_with_lineage(
     inline with ``rec_type='lineage'``. Split afterwards with
     :func:`split_lineage` (persist the unified frame first if both
     halves are consumed). mapInArrow like the pure path."""
-    page_pa = {
-        "url": pa.string(),
-        "text": pa.string(),
-        "spans": _SPAN_PA,
-        "mean_score": pa.float64(),
-        "blocks_total": pa.int32(),
-        "blocks_kept": pa.int32(),
-        "bytes_in": pa.int64(),
-        "truncated": pa.bool_(),
-    }
-    lineage_pa = {
-        "partition_id": pa.int32(),
-        "urls_in": pa.int64(),
-        "lineage_bytes_in": pa.int64(),
-        "lineage_blocks_kept": pa.int64(),
-        "extract_ms": pa.float64(),
-    }
-    lineage_names = list(lineage_pa)
-    names = [f.name for f in UNIFIED_SCHEMA.fields]
+    build = _batch_builder(_extract_rows(cfg), EXTRACTED_SCHEMA)
+    unified = to_arrow_schema(UNIFIED_SCHEMA)
+    n_page = len(EXTRACTED_SCHEMA.fields)
+    page_fields = list(unified)[1 : 1 + n_page]
+    lineage_fields = list(unified)[1 + n_page :]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
@@ -223,35 +184,28 @@ def extract_pages_with_lineage(
         urls_in = 0
         bytes_in = 0
         blocks_kept = 0
-        any_rows = False
         for rb in batches:
             if not rb.num_rows:
                 continue
-            any_rows = True
-            out = _extract_record_batch(rb, cfg)
+            out = build(rb)
             n = out.num_rows
             urls_in += n
-            bytes_in += int(pc.sum(out.column(6)).as_py() or 0)
-            blocks_kept += int(pc.sum(out.column(5)).as_py() or 0)
-            arrays = [pa.array(["page"] * n, type=pa.string())] + list(
-                out.columns
-            ) + [pa.nulls(n, type=lineage_pa[c]) for c in lineage_names]
-            yield pa.RecordBatch.from_arrays(arrays, names)
-        if any_rows:
-            ms = (time.perf_counter() - t0) * 1000.0
-            lin_vals = {
-                "partition_id": pid,
-                "urls_in": urls_in,
-                "lineage_bytes_in": bytes_in,
-                "lineage_blocks_kept": blocks_kept,
-                "extract_ms": ms,
-            }
-            arrays = (
-                [pa.array(["lineage"], type=pa.string())]
-                + [pa.nulls(1, type=t) for t in page_pa.values()]
-                + [pa.array([lin_vals[c]], type=lineage_pa[c]) for c in lineage_names]
+            bytes_in += pc.sum(out.column("bytes_in")).as_py() or 0
+            blocks_kept += pc.sum(out.column("blocks_kept")).as_py() or 0
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(["page"] * n, type=pa.string()), *out.columns]
+                + [pa.nulls(n, type=f.type) for f in lineage_fields],
+                schema=unified,
             )
-            yield pa.RecordBatch.from_arrays(arrays, names)
+        if urls_in:
+            ms = (time.perf_counter() - t0) * 1000.0
+            lineage = (pid, urls_in, bytes_in, blocks_kept, ms)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(["lineage"], type=pa.string())]
+                + [pa.nulls(1, type=f.type) for f in page_fields]
+                + [pa.array([v], type=f.type) for v, f in zip(lineage, lineage_fields)],
+                schema=unified,
+            )
 
     return pages.select("url", "html").mapInArrow(run, UNIFIED_SCHEMA)
 
