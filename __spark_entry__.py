@@ -1538,12 +1538,9 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/png.py — no image library). The oracle states the
     channel sums from the pixel arithmetic — ground truth, the decoder
     cannot mirror it."""
-    from webextract.operators.multimodal import (
-        png_pixel_stats,
-        synth_pixel_png,
-    )
+    from webextract.operators.multimodal import pixel_stats, synth_pixel_png
 
-    return png_pixel_stats(synth_pixel_png(_docs(spark, sf_dir)))
+    return pixel_stats(synth_pixel_png(_docs(spark, sf_dir)))
 
 
 def q_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -350,7 +350,9 @@ def test_parse_pdf_reports_mediabox_widths():
 
 def test_pdf_operators_on_spark(spark):
     from webextract.operators.multimodal import (
+        MEDIA_SCHEMA,
         _pdf_plan,
+        pdf_columns,
         pdf_metadata,
         pdf_text,
         synth_pdf,
@@ -359,7 +361,9 @@ def test_pdf_operators_on_spark(spark):
     docs = spark.createDataFrame(
         [(i, "t") for i in range(12)], "doc_id long, text string"
     )
-    media = synth_pdf(docs)
+    # a NULL payload is malformed input: no rows, never a failed task
+    null = spark.createDataFrame([(99, None, "application/pdf")], MEDIA_SCHEMA)
+    media = synth_pdf(docs).unionByName(null)
     txt = {
         (r["media_id"], r["page_no"]): r
         for r in pdf_text(media).collect()
@@ -379,6 +383,10 @@ def test_pdf_operators_on_spark(spark):
             assert row["text"] == expect
             assert row["n_frags"] == len(frags)
             assert row["n_chars"] == len(expect)
+    assert set(meta) == set(range(12))
+    assert {mid for mid, _ in txt} == set(range(12))
+    cols = pdf_columns(media).collect()
+    assert sorted((r["media_id"], r["page_no"]) for r in cols) == sorted(txt)
 
 
 def test_extract_any_dispatch(spark):

@@ -119,14 +119,14 @@ def test_spark_png_stats_and_resize_roundtrip(spark):
     from pyspark.sql import Row
 
     from webextract.operators.multimodal import (
-        png_pixel_stats,
+        pixel_stats,
         resize_media,
         synth_pixel_png,
     )
 
     docs = spark.createDataFrame([Row(doc_id=i) for i in range(20)])
     stats = {
-        r.media_id: r for r in png_pixel_stats(synth_pixel_png(docs)).collect()
+        r.media_id: r for r in pixel_stats(synth_pixel_png(docs)).collect()
     }
     for mid in range(20):
         w, h = mid % 8 + 1, mid % 6 + 1
@@ -163,16 +163,30 @@ def test_spark_png_stats_and_resize_roundtrip(spark):
 
 
 def test_invalid_payload_yields_ok_false(spark):
-    from pyspark.sql import Row
-
-    from webextract.operators.multimodal import png_pixel_stats
+    """Undecodable and NULL payloads give one ok=false row each from
+    every pixel stage — never a failed task."""
+    from webextract.operators.multimodal import (
+        MEDIA_SCHEMA,
+        gif_frame_stats,
+        pixel_stats,
+        resize_media,
+    )
 
     media = spark.createDataFrame(
         [
-            Row(media_id=0, payload=b"garbage", mime="image/png"),
-            Row(media_id=1, payload=PNG_SIG + b"\x00\x00", mime="image/png"),
-        ]
+            (0, b"garbage", "image/png"),
+            (1, PNG_SIG + b"\x00\x00", "image/png"),
+            (2, None, "image/png"),
+        ],
+        MEDIA_SCHEMA,
     )
-    rows = {r.media_id: r for r in png_pixel_stats(media).collect()}
+    rows = {r.media_id: r for r in pixel_stats(media).collect()}
     assert not rows[0].ok and rows[0].sum_r is None
     assert not rows[1].ok
+    assert not rows[2].ok and rows[2].sum_r is None
+    resized = resize_media(media, 4, 3).collect()
+    assert sorted(r.media_id for r in resized) == [0, 1, 2]
+    assert all(not r.ok and r.payload is None for r in resized)
+    frames = gif_frame_stats(media).collect()
+    assert sorted(r.media_id for r in frames) == [0, 1, 2]
+    assert all(not r.ok and r.frame_id is None for r in frames)

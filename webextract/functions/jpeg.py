@@ -30,7 +30,7 @@ statable in SQL from the planted block formula. The general AC path is
 pinned by coefficient-level Huffman roundtrips and the DCT/IDCT
 orthogonality property (tests/test_jpeg.py).
 
-The per-pixel work runs inside the Arrow-batched ``mapInPandas``
+The per-pixel work runs inside the Arrow-batched ``mapInArrow``
 stages (operators/multimodal.py) — the one per-row Python budget the
 pipeline reserves for byte-format parsing; the distributed parallelism
 axis is media rows per batch, not pixels.

@@ -17,15 +17,15 @@ Arrow batch → write. Design points (SURVEY.md §4):
    predict_system.py:68-119) are emitted from the same UDF as extra
    rows with a discriminator column and split afterwards — no second
    pass over the html;
- * :func:`map_pages` is the one Arrow batch driver: extraction, layout
-   block facts, KIE and table cells are each a per-page row function
-   under a Spark schema, and the lineage variant reuses its builder.
+ * extraction is one :func:`~webextract.operators.rows.map_rows`
+   instance (the batch loop every per-row Python stage shares), and the
+   lineage variant reuses its batch builder.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterator
 from operator import itemgetter
 
 import pyarrow as pa
@@ -38,6 +38,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.functions.extract import extract_page
+from webextract.operators.rows import Rows, batch_builder, map_rows
 
 SPAN_TYPE = T.StructType(
     [
@@ -75,59 +76,12 @@ UNIFIED_SCHEMA = T.StructType(
     ]
 )
 
-PageRows = Callable[[bytes | None], Iterable[tuple]]
-
-
-def _batch_builder(
-    page_rows: PageRows, schema: T.StructType
-) -> Callable[[pa.RecordBatch], pa.RecordBatch]:
-    """(url, html) batch → ``schema`` batch: each page's 0..N rows from
-    ``page_rows(html)``, each prefixed with the page url. Columns are
-    built with ``pa.array`` (no pandas objects) against the Arrow schema
-    DERIVED from the Spark one, so the two cannot drift."""
-    arrow_schema = to_arrow_schema(schema)
-    n_cols = len(schema.fields) - 1
-
-    def build(rb: pa.RecordBatch) -> pa.RecordBatch:
-        urls: list[str] = []
-        rows: list[tuple] = []
-        for url, raw in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
-            n = len(rows)
-            rows.extend(page_rows(raw))
-            urls.extend([url] * (len(rows) - n))
-        cols = [urls, *(list(zip(*rows)) or [()] * n_cols)]
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-            schema=arrow_schema,
-        )
-
-    return build
-
-
-def map_pages(
-    pages: DataFrame, page_rows: PageRows, schema: T.StructType
-) -> DataFrame:
-    """THE page operator shape: select ``(url, html)`` so Catalyst
-    prunes the scan, then ONE ``mapInArrow`` crossing in which every
-    page's html becomes ``page_rows(html)`` rows (0..N per page,
-    without the url) under ``schema``, whose field 0 is the url.
-    Extraction, layout, KIE and table recovery are all instances."""
-    build = _batch_builder(page_rows, schema)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows:
-                yield build(rb)
-
-    return pages.select("url", "html").mapInArrow(run, schema)
-
-
 # extract_page's result keys in EXTRACTED_SCHEMA order (after the url)
 _page_row = itemgetter(*[f.name for f in EXTRACTED_SCHEMA.fields[1:]])
 
 
-def _extract_rows(cfg: ExtractConfig) -> PageRows:
-    return lambda raw: (_page_row(extract_page(raw, cfg)),)
+def _extract_rows(cfg: ExtractConfig) -> Rows:
+    return lambda url, raw: ((url, *_page_row(extract_page(raw, cfg))),)
 
 
 def extract_pages(
@@ -150,7 +104,7 @@ def extract_pages(
     """
     if sort_by_size:
         pages = pages.sortWithinPartitions(F.length("html"))
-    return map_pages(pages, _extract_rows(cfg), EXTRACTED_SCHEMA)
+    return map_rows(pages, ("url", "html"), _extract_rows(cfg), EXTRACTED_SCHEMA)
 
 
 def to_json_lines(extracted: DataFrame) -> DataFrame:
@@ -171,7 +125,7 @@ def extract_pages_with_lineage(
     inline with ``rec_type='lineage'``. Split afterwards with
     :func:`split_lineage` (persist the unified frame first if both
     halves are consumed). mapInArrow like the pure path."""
-    build = _batch_builder(_extract_rows(cfg), EXTRACTED_SCHEMA)
+    build = batch_builder(_extract_rows(cfg), EXTRACTED_SCHEMA)
     unified = to_arrow_schema(UNIFIED_SCHEMA)
     n_page = len(EXTRACTED_SCHEMA.fields)
     page_fields = list(unified)[1 : 1 + n_page]

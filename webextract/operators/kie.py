@@ -25,7 +25,7 @@ reading-order RE):
  - ``pair_id`` is the per-page 1-based emission sequence.
 
 Scale shape: each extractor is one
-:func:`webextract.operators.extract.map_pages` instance — ONE
+:func:`webextract.operators.rows.map_rows` instance — ONE
 ``mapInArrow`` crossing — over the shared page front-end
 :func:`webextract.functions.extract.page_blocks` (the same blocks
 extraction scores, so block order agrees exactly with the extraction
@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.functions.extract import page_blocks
-from webextract.operators.extract import PageRows, map_pages
+from webextract.operators.rows import Rows, map_rows
 
 KIE_PAIRS_SCHEMA = T.StructType(
     [
@@ -114,12 +114,13 @@ def group_list_items(
 
 def _walk_rows(
     walker: Callable[[list[str], list[str]], list[tuple]], cfg: ExtractConfig
-) -> PageRows:
-    """``walker`` over each page's (tag, text) block stream."""
+) -> Rows:
+    """``walker`` over each page's (tag, text) block stream, each row
+    prefixed with the page url."""
 
-    def rows(raw: bytes | None) -> list[tuple]:
+    def rows(url: str, raw: bytes | None) -> list[tuple]:
         blocks, _, _ = page_blocks(raw, cfg)
-        return walker(blocks["tag"], blocks["text"])
+        return [(url, *r) for r in walker(blocks["tag"], blocks["text"])]
 
     return rows
 
@@ -134,7 +135,7 @@ def kie_pairs(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFram
             for i, (k, v) in enumerate(pair_blocks(tags, texts), start=1)
         ]
 
-    return map_pages(pages, _walk_rows(walk, cfg), KIE_PAIRS_SCHEMA)
+    return map_rows(pages, ("url", "html"), _walk_rows(walk, cfg), KIE_PAIRS_SCHEMA)
 
 
 def list_items(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -142,6 +143,6 @@ def list_items(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFra
     list item with its list membership and 1-based position — the
     PP-Structure list-REGION recovery at item granularity. Grouping
     semantics: :func:`group_list_items`."""
-    return map_pages(
-        pages, _walk_rows(group_list_items, cfg), LIST_ITEMS_SCHEMA
+    return map_rows(
+        pages, ("url", "html"), _walk_rows(group_list_items, cfg), LIST_ITEMS_SCHEMA
     )

@@ -9,7 +9,7 @@ density, boilerplate status — so typing is a codegen CASE over block
 facts, not a second Python pass.
 
 Scale shape: :func:`block_facts` is one
-:func:`webextract.operators.extract.map_pages` instance over the shared
+:func:`webextract.operators.rows.map_rows` instance over the shared
 page front-end :func:`webextract.functions.extract.page_blocks` — ONE
 ``mapInArrow`` crossing per Arrow batch, the same budget as extraction
 (the HTML parse is the one unavoidable Python stage, SURVEY.md §2.10);
@@ -20,6 +20,7 @@ built-ins inside whole-stage codegen.
 from __future__ import annotations
 
 from collections.abc import Iterable
+from itertools import repeat
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,7 +29,7 @@ from pyspark.sql import types as T
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.functions.extract import page_blocks
 from webextract.functions.scorer import score_blocks
-from webextract.operators.extract import map_pages
+from webextract.operators.rows import map_rows
 
 # raw per-block facts emitted by the UDF (region typing happens JVM-side)
 BLOCK_FACTS_SCHEMA = T.StructType(
@@ -67,16 +68,17 @@ def block_facts(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFr
     batch, no second parse.
     """
 
-    def rows(raw: bytes | None) -> Iterable[tuple]:
+    def rows(url: str, raw: bytes | None) -> Iterable[tuple]:
         blocks, _, _ = page_blocks(raw, cfg)
         scores, keep = score_blocks(blocks, cfg)
         return zip(
+            repeat(url),
             *(blocks[c] for c in _FACT_COLS),
             scores.tolist(),
             keep.tolist(),
         )
 
-    return map_pages(pages, rows, BLOCK_FACTS_SCHEMA)
+    return map_rows(pages, ("url", "html"), rows, BLOCK_FACTS_SCHEMA)
 
 
 def region_type_col(

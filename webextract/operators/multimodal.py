@@ -5,8 +5,10 @@ op (``DecodeImage``, ppocr/data/imaug/operators.py:30-68; GIF/PDF
 dispatch in ``check_and_read``, ppocr/utils/utility.py:94-124). This
 module reproduces that shape for a training-data pipeline: media rides
 as a ``binary`` column with typed metadata; format sniffing and byte
-accounting are JVM built-ins; decode / resize / frame-sample are
-Arrow-batched ``mapInPandas`` stages.
+accounting are JVM built-ins; decode / resize / frame-sample, the PDF
+parsers and the fixture synthesizers are plain per-row functions, each
+run by :func:`webextract.operators.rows.map_rows` (one ``mapInArrow``
+crossing per Arrow batch, no pandas conversion).
 
 Metadata decode (format + dimensions) is REAL for png/jpeg/gif —
 :func:`parse_image_header` reads PNG IHDR, GIF logical-screen and JPEG
@@ -39,12 +41,14 @@ and tested throughout.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from webextract.operators.rows import map_rows
 
 # magic-byte → format map (public file signatures), applied JVM-side
 MAGIC = {
@@ -179,27 +183,15 @@ def parse_image_header(b: bytes | None) -> tuple[str, int, int, bool]:
 
 
 def decode_media(media: DataFrame) -> DataFrame:
-    """Arrow-batched decode: one ``mapInPandas`` crossing, mirrors the
-    extraction operator's batching. Emits typed decode results; a real
-    codec drops in at :func:`_parse_fake_header` only."""
+    """Arrow-batched decode: one :func:`map_rows` crossing, like the
+    extraction operator. Emits typed decode results; a real codec
+    drops in at :func:`_parse_fake_header` only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            parsed = [parse_image_header(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "n_bytes": [len(b) if b is not None else 0 for b in pdf["payload"]],
-                    "ok": [p[3] for p in parsed],
-                }
-            )
+    def rows(mid: int, b: bytes | None) -> tuple[tuple, ...]:
+        fmt, w, h, ok = parse_image_header(b)
+        return ((mid, fmt, w, h, len(b or b""), ok),)
 
-    return media.select("media_id", "payload").mapInPandas(run, DECODED_SCHEMA)
+    return map_rows(media, ("media_id", "payload"), rows, DECODED_SCHEMA)
 
 
 FEATURES_SCHEMA = T.StructType(
@@ -229,32 +221,14 @@ def media_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     assert 256 % n_bins == 0
     shift = 8 - (n_bins - 1).bit_length()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(mid: int, b: bytes | None) -> tuple[tuple, ...]:
+        if not b:
+            return ((mid, 0, None, None, False),)
+        arr = np.frombuffer(b, dtype=np.uint8)
+        hist = np.bincount(arr >> shift, minlength=n_bins)
+        return ((mid, len(arr), float(arr.mean()), hist.tolist(), True),)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                "media_id": pdf["media_id"].to_numpy(),
-                "n_bytes": [], "mean_byte": [], "byte_hist": [], "ok": [],
-            }
-            for b in pdf["payload"]:
-                if b is None or len(b) == 0:
-                    out["n_bytes"].append(0)
-                    out["mean_byte"].append(None)
-                    out["byte_hist"].append(None)
-                    out["ok"].append(False)
-                    continue
-                arr = np.frombuffer(b, dtype=np.uint8)
-                hist = np.bincount(arr >> shift, minlength=n_bins)
-                out["n_bytes"].append(len(arr))
-                out["mean_byte"].append(float(arr.mean()))
-                out["byte_hist"].append([int(x) for x in hist])
-                out["ok"].append(True)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, FEATURES_SCHEMA)
+    return map_rows(media, ("media_id", "payload"), rows, FEATURES_SCHEMA)
 
 
 PIXELS_SCHEMA = T.StructType(
@@ -285,6 +259,16 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
+def _synth_media(
+    docs: DataFrame, payload: Callable[[int], bytes], mime: str
+) -> DataFrame:
+    """docs(doc_id, ...) → media rows ``(doc_id, payload(doc_id), mime)``
+    — the shared shape of the pixel and PDF fixture synthesizers."""
+    return map_rows(
+        docs, ("doc_id",), lambda mid: ((mid, payload(mid), mime),), MEDIA_SCHEMA
+    )
+
+
 def synth_pixel_png(docs: DataFrame) -> DataFrame:
     """FULL valid PNGs with deterministic pixel content — the fixture
     behind the real-pixel-decode queries. Image ``doc_id``:
@@ -298,32 +282,17 @@ def synth_pixel_png(docs: DataFrame) -> DataFrame:
     fixture, not the measured operator)."""
     from webextract.functions.png import encode_png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(mid: int) -> bytes:
+        w, h = mid % 8 + 1, mid % 6 + 1
+        x = np.arange(w, dtype=np.int64)
+        y = np.arange(h, dtype=np.int64)
+        r = np.broadcast_to((mid + x) % 256, (h, w))
+        g = np.broadcast_to(((mid + 3 * y) % 256)[:, None], (h, w))
+        b = (x[None, :] * y[:, None]) % 256
+        arr = np.stack([r, g, b], axis=2).astype(np.uint8)
+        return encode_png(arr, row_filter=lambda yy: yy % 5)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                w, h = mid % 8 + 1, mid % 6 + 1
-                x = np.arange(w, dtype=np.int64)
-                y = np.arange(h, dtype=np.int64)
-                r = np.broadcast_to((mid + x) % 256, (h, w))
-                g = np.broadcast_to(((mid + 3 * y) % 256)[:, None], (h, w))
-                b = (x[None, :] * y[:, None]) % 256
-                arr = np.stack([r, g, b], axis=2).astype(np.uint8)
-                payloads.append(encode_png(arr, row_filter=lambda yy: yy % 5))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "image/png",
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return _synth_media(docs, payload, "image/png")
 
 
 def decode_image(b: bytes):
@@ -349,6 +318,12 @@ def decode_image(b: bytes):
     raise ValueError("no pixel codec for this format (png/gif/jpeg)")
 
 
+def _channel_sums(arr) -> tuple[int, int, int]:
+    """Exact integer R, G, B sums of an (h, w, 3) image."""
+    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+    return int(s[0]), int(s[1]), int(s[2])
+
+
 def pixel_stats(media: DataFrame) -> DataFrame:
     """REAL pixel decode (:func:`decode_image`: PNG chunk walk + CRC-32
     verification + zlib inflate + all-five-filter unfiltering, or GIF
@@ -357,43 +332,19 @@ def pixel_stats(media: DataFrame) -> DataFrame:
     mean. Sums are exact integers and the mean is ONE IEEE division of
     exact ints (hash-portable); a payload that is not a decodable
     PNG/GIF/JPEG yields ``ok=false`` with null stats instead of
-    failing the job (total-function discipline)."""
+    failing the job (total-function discipline); a NULL payload is
+    read as empty bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(mid: int, b: bytes | None) -> tuple[tuple, ...]:
+        try:
+            arr = decode_image(b or b"")
+        except (ValueError, zlib.error):
+            return ((mid, *[None] * 7, False),)
+        h, w = arr.shape[:2]
+        r, g, bl = _channel_sums(arr)
+        return ((mid, w, h, w * h, r, g, bl, (r + g + bl) / (3 * w * h), True),)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k.name: [] for k in PIXELS_SCHEMA.fields}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": int(mid), "ok": False}
-                try:
-                    arr = decode_image(bytes(b))
-                    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    n_px = arr.shape[0] * arr.shape[1]
-                    row.update(
-                        width=arr.shape[1],
-                        height=arr.shape[0],
-                        n_px=n_px,
-                        sum_r=int(s[0]),
-                        sum_g=int(s[1]),
-                        sum_b=int(s[2]),
-                        mean_px=float(int(s.sum()) / (3 * n_px)),
-                        ok=True,
-                    )
-                except (ValueError, zlib.error):
-                    pass
-                for f in PIXELS_SCHEMA.fields:
-                    out[f.name].append(row.get(f.name))
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, PIXELS_SCHEMA)
-
-
-# back-compat name from the round the codec was PNG-only; the GIF
-# dispatch is a strict extension (PNG payloads take the same path)
-png_pixel_stats = pixel_stats
+    return map_rows(media, ("media_id", "payload"), rows, PIXELS_SCHEMA)
 
 
 def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
@@ -408,39 +359,18 @@ def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
     input-pixel formulas; the re-encoded payload is pinned by the
     decode(encode(resize)) round-trip test rather than the oracle
     (deflate bytes are library-dependent, the pixels are not).
-    Undecodable payloads yield ``ok=false`` rows."""
+    Undecodable (or NULL) payloads yield ``ok=false`` rows."""
     from webextract.functions.png import encode_png, resize_nearest
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(mid: int, b: bytes | None) -> tuple[tuple, ...]:
+        try:
+            arr = resize_nearest(decode_image(b or b""), target_w, target_h)
+            png = encode_png(arr)
+        except (ValueError, zlib.error):
+            return ((mid, *[None] * 6, False),)
+        return ((mid, target_w, target_h, *_channel_sums(arr), png, True),)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k.name: [] for k in RESIZED_SCHEMA.fields}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": int(mid), "ok": False}
-                try:
-                    arr = resize_nearest(
-                        decode_image(bytes(b)), target_w, target_h
-                    )
-                    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    row.update(
-                        width=target_w,
-                        height=target_h,
-                        sum_r=int(s[0]),
-                        sum_g=int(s[1]),
-                        sum_b=int(s[2]),
-                        payload=encode_png(arr),
-                        ok=True,
-                    )
-                except (ValueError, zlib.error):
-                    pass
-                for f in RESIZED_SCHEMA.fields:
-                    out[f.name].append(row.get(f.name))
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
+    return map_rows(media, ("media_id", "payload"), rows, RESIZED_SCHEMA)
 
 
 FRAME_PIXELS_SCHEMA = T.StructType(
@@ -472,42 +402,22 @@ def synth_pixel_gif(docs: DataFrame, multi_frame: bool = False) -> DataFrame:
     ``7f`` — a real animated-GIF container."""
     from webextract.functions.gif import encode_gif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(mid: int) -> bytes:
+        w, h = mid % 8 + 1, mid % 6 + 1
+        nc = 1 << (mid % 3 + 2)
+        i = np.arange(nc, dtype=np.int64)
+        pal = np.stack(
+            [(mid + 17 * i) % 256, (mid + 29 * i) % 256,
+             (mid + 43 * i) % 256],
+            axis=1,
+        ).astype(np.uint8)
+        x = np.arange(w, dtype=np.int64)[None, :]
+        y = np.arange(h, dtype=np.int64)[:, None]
+        n_frames = mid % 3 + 1 if multi_frame else 1
+        frames = [(mid + 5 * x + 3 * y + 7 * f) % nc for f in range(n_frames)]
+        return encode_gif(frames, pal, interlace=bool(mid % 2))
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                w, h = mid % 8 + 1, mid % 6 + 1
-                nc = 1 << (mid % 3 + 2)
-                i = np.arange(nc, dtype=np.int64)
-                pal = np.stack(
-                    [(mid + 17 * i) % 256, (mid + 29 * i) % 256,
-                     (mid + 43 * i) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                n_frames = mid % 3 + 1 if multi_frame else 1
-                frames = [
-                    (mid + 5 * x + 3 * y + 7 * f) % nc
-                    for f in range(n_frames)
-                ]
-                payloads.append(
-                    encode_gif(frames, pal, interlace=bool(mid % 2))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "image/gif",
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return _synth_media(docs, payload, "image/gif")
 
 
 def synth_pixel_jpeg(docs: DataFrame) -> DataFrame:
@@ -528,39 +438,22 @@ def synth_pixel_jpeg(docs: DataFrame) -> DataFrame:
     restart markers (DRI/RSTn under the oracle gate)."""
     from webextract.functions.jpeg import QUANT_FLAT, encode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(mid: int) -> bytes:
+        bw, bh = 2 * (mid % 3 + 1), 2 * (mid % 2 + 1)
+        i = np.arange(bh, dtype=np.int64)[:, None]
+        j = np.arange(bw, dtype=np.int64)[None, :]
+        v = ((mid + 11 * i + 5 * j) % 256).astype(np.uint8)
+        plane = np.kron(v, np.ones((8, 8), dtype=np.uint8))
+        img = np.stack([plane] * 3, axis=-1)
+        return encode_jpeg(
+            img,
+            QUANT_FLAT,
+            QUANT_FLAT,
+            subsample=bool(mid % 2),
+            restart_interval=2 if mid % 5 == 0 else 0,
+        )
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                bw, bh = 2 * (mid % 3 + 1), 2 * (mid % 2 + 1)
-                i = np.arange(bh, dtype=np.int64)[:, None]
-                j = np.arange(bw, dtype=np.int64)[None, :]
-                v = ((mid + 11 * i + 5 * j) % 256).astype(np.uint8)
-                plane = np.kron(v, np.ones((8, 8), dtype=np.uint8))
-                img = np.stack([plane] * 3, axis=-1)
-                payloads.append(
-                    encode_jpeg(
-                        img,
-                        QUANT_FLAT,
-                        QUANT_FLAT,
-                        subsample=bool(mid % 2),
-                        restart_interval=2 if mid % 5 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return _synth_media(docs, payload, "image/jpeg")
 
 
 def gif_frame_stats(media: DataFrame) -> DataFrame:
@@ -570,46 +463,21 @@ def gif_frame_stats(media: DataFrame) -> DataFrame:
     reference's multi-page explode (``check_and_read``'s PDF branch,
     ppocr/utils/utility.py:110-120, one image per page) where
     :func:`frame_sample` fans out only container METADATA. Undecodable
-    payloads yield one ``ok=false`` row (total-function discipline)."""
+    (or NULL) payloads yield one ``ok=false`` row (total-function
+    discipline)."""
     from webextract.functions.gif import decode_gif_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(mid: int, b: bytes | None) -> list[tuple]:
+        try:
+            frames = decode_gif_frames(b or b"")
+        except ValueError:
+            return [(mid, *[None] * 6, False)]
+        return [
+            (mid, fid, arr.shape[1], arr.shape[0], *_channel_sums(arr), True)
+            for fid, arr in enumerate(frames)
+        ]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k.name: [] for k in FRAME_PIXELS_SCHEMA.fields}
-
-            def push(row):
-                for f in FRAME_PIXELS_SCHEMA.fields:
-                    out[f.name].append(row.get(f.name))
-
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = decode_gif_frames(bytes(b))
-                except ValueError:
-                    push({"media_id": int(mid), "ok": False})
-                    continue
-                for fid, arr in enumerate(frames):
-                    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    push(
-                        {
-                            "media_id": int(mid),
-                            "frame_id": fid,
-                            "width": arr.shape[1],
-                            "height": arr.shape[0],
-                            "sum_r": int(s[0]),
-                            "sum_g": int(s[1]),
-                            "sum_b": int(s[2]),
-                            "ok": True,
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, FRAME_PIXELS_SCHEMA
-    )
+    return map_rows(media, ("media_id", "payload"), rows, FRAME_PIXELS_SCHEMA)
 
 
 def explode_pages(media: DataFrame) -> DataFrame:
@@ -1061,29 +929,11 @@ def synth_pdf(docs: DataFrame) -> DataFrame:
     (ppocr/utils/utility.py:102-120) made real for webtext."""
     from webextract.functions.pdf import encode_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                version, compress, pages = _pdf_plan(int(mid))
-                payloads.append(
-                    encode_pdf(
-                        [[f for f in pg] for pg in pages],
-                        compress=compress,
-                        version=version,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "application/pdf",
-                }
-            )
+    def payload(mid: int) -> bytes:
+        version, compress, pages = _pdf_plan(mid)
+        return encode_pdf(pages, compress=compress, version=version)
 
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return _synth_media(docs, payload, "application/pdf")
 
 
 PDF_TEXT_SCHEMA = (
@@ -1098,37 +948,22 @@ def pdf_text(media: DataFrame) -> DataFrame:
     ``sorted_boxes`` analog — fragments sorted top-to-bottom,
     left-to-right (tools/infer/predict_system.py reading-order sort) —
     joined with single spaces. Arrow-batched per-row Python: the
-    document parse is the SURVEY §2.10-budgeted case, same as HTML."""
+    document parse is the SURVEY §2.10-budgeted case, same as HTML.
+    Malformed (or NULL) payloads yield no rows."""
     from webextract.functions.pdf import PdfError, parse_pdf, reading_order
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mids, pnos, nfr, txt, nch = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, pages, _, _ = parse_pdf(bytes(payload))
-                except PdfError:
-                    continue  # malformed input → no pages (counted vs oracle)
-                for p, frags in enumerate(pages):
-                    joined = " ".join(t for _, _, t in reading_order(frags))
-                    mids.append(int(mid))
-                    pnos.append(p + 1)
-                    nfr.append(len(frags))
-                    txt.append(joined)
-                    nch.append(len(joined))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "page_no": pd.Series(pnos, dtype="int32"),
-                    "n_frags": pd.Series(nfr, dtype="int32"),
-                    "text": pd.Series(txt, dtype="object"),
-                    "n_chars": pd.Series(nch, dtype="int32"),
-                }
-            )
+    def rows(mid: int, b: bytes | None) -> list[tuple]:
+        try:
+            _, pages, _, _ = parse_pdf(b or b"")
+        except PdfError:
+            return []  # malformed input → no pages (counted vs oracle)
+        out = []
+        for p, frags in enumerate(pages, start=1):
+            joined = " ".join(t for _, _, t in reading_order(frags))
+            out.append((mid, p, len(frags), joined, len(joined)))
+        return out
 
-    return media.select("media_id", "payload").mapInPandas(run, PDF_TEXT_SCHEMA)
+    return map_rows(media, ("media_id", "payload"), rows, PDF_TEXT_SCHEMA)
 
 
 PDF_META_SCHEMA = (
@@ -1142,48 +977,23 @@ def pdf_metadata(media: DataFrame) -> DataFrame:
     version, page count from the page-tree walk, object count from the
     xref table, whether any content stream was filtered, and total
     extracted fragments/characters. The metadata-peek stage of the
-    multi-format dispatch (``check_and_read``), PDF edition."""
+    multi-format dispatch (``check_and_read``), PDF edition. Malformed
+    (or NULL) payloads yield no row."""
     from webextract.functions.pdf import PdfError, parse_pdf, reading_order
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = {k: [] for k in (
-                "media_id", "version", "n_pages", "n_objects",
-                "compressed", "total_frags", "total_chars",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    version, pages, compressed, n_objects = parse_pdf(
-                        bytes(payload)
-                    )
-                except PdfError:
-                    continue
-                total_chars = sum(
-                    len(" ".join(t for _, _, t in reading_order(fr)))
-                    for fr in pages
-                )
-                rows["media_id"].append(int(mid))
-                rows["version"].append(version)
-                rows["n_pages"].append(len(pages))
-                rows["n_objects"].append(n_objects)
-                rows["compressed"].append(bool(compressed))
-                rows["total_frags"].append(sum(len(fr) for fr in pages))
-                rows["total_chars"].append(total_chars)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "version": pd.Series(rows["version"], dtype="object"),
-                    "n_pages": pd.Series(rows["n_pages"], dtype="int32"),
-                    "n_objects": pd.Series(rows["n_objects"], dtype="int32"),
-                    "compressed": pd.Series(rows["compressed"], dtype="bool"),
-                    "total_frags": pd.Series(rows["total_frags"], dtype="int32"),
-                    "total_chars": pd.Series(rows["total_chars"], dtype="int32"),
-                }
-            )
+    def rows(mid: int, b: bytes | None) -> tuple[tuple, ...]:
+        try:
+            version, pages, compressed, n_objects = parse_pdf(b or b"")
+        except PdfError:
+            return ()
+        total_chars = sum(
+            len(" ".join(t for _, _, t in reading_order(fr))) for fr in pages
+        )
+        total_frags = sum(len(fr) for fr in pages)
+        return ((mid, version, len(pages), n_objects, bool(compressed),
+                 total_frags, total_chars),)
 
-    return media.select("media_id", "payload").mapInPandas(run, PDF_META_SCHEMA)
+    return map_rows(media, ("media_id", "payload"), rows, PDF_META_SCHEMA)
 
 
 def _pdf_col_plan(mid: int):
@@ -1222,23 +1032,10 @@ def synth_pdf_columns(docs: DataFrame) -> DataFrame:
     FlateDecode-compress the content stream."""
     from webextract.functions.pdf import encode_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = [
-                encode_pdf(_pdf_col_plan(int(mid)), compress=int(mid) % 2 == 0)
-                for mid in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "application/pdf",
-                }
-            )
+    def payload(mid: int) -> bytes:
+        return encode_pdf(_pdf_col_plan(mid), compress=mid % 2 == 0)
 
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return _synth_media(docs, payload, "application/pdf")
 
 
 PDF_COLUMNS_SCHEMA = (
@@ -1255,66 +1052,36 @@ def pdf_columns(media: DataFrame) -> DataFrame:
     recovery_to_doc.py:81-140; SURVEY §2 W2) — instead of the plain
     top-to-bottom sort. ``layout`` is ``'double'`` when both columns
     received fragments, else ``'single'``; spanner/column counts are
-    reported so the classification itself is oracle-checkable."""
+    reported so the classification itself is oracle-checkable.
+    Malformed (or NULL) payloads yield no rows."""
     from webextract.functions.pdf import (
         PdfError,
         column_layout_order,
         parse_pdf,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = {k: [] for k in (
-                "media_id", "page_no", "layout", "n_spanners",
-                "n_left", "n_right", "text", "n_chars",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, pages, _, _, widths = parse_pdf(
-                        bytes(payload), with_widths=True
-                    )
-                except PdfError:
-                    continue
-                for p, frags in enumerate(pages):
-                    # classify against the page's ACTUAL MediaBox width
-                    # (A4 / landscape pages get their own quartiles,
-                    # like the reference passing the real image w)
-                    ordered = column_layout_order(
-                        frags, page_width=widths[p]
-                    )
-                    sides = [side for _, side in ordered]
-                    n_span = sides.count("single")
-                    n_left = sides.count("left")
-                    n_right = sides.count("right")
-                    joined = " ".join(f[2] for f, _ in ordered)
-                    rows["media_id"].append(int(mid))
-                    rows["page_no"].append(p + 1)
-                    rows["layout"].append(
-                        "double" if n_left and n_right else "single"
-                    )
-                    rows["n_spanners"].append(n_span)
-                    rows["n_left"].append(n_left)
-                    rows["n_right"].append(n_right)
-                    rows["text"].append(joined)
-                    rows["n_chars"].append(len(joined))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "page_no": pd.Series(rows["page_no"], dtype="int32"),
-                    "layout": pd.Series(rows["layout"], dtype="object"),
-                    "n_spanners": pd.Series(rows["n_spanners"], dtype="int32"),
-                    "n_left": pd.Series(rows["n_left"], dtype="int32"),
-                    "n_right": pd.Series(rows["n_right"], dtype="int32"),
-                    "text": pd.Series(rows["text"], dtype="object"),
-                    "n_chars": pd.Series(rows["n_chars"], dtype="int32"),
-                }
-            )
+    def rows(mid: int, b: bytes | None) -> list[tuple]:
+        try:
+            _, pages, _, _, widths = parse_pdf(b or b"", with_widths=True)
+        except PdfError:
+            return []
+        out = []
+        for p, frags in enumerate(pages):
+            # classify against the page's ACTUAL MediaBox width
+            # (A4 / landscape pages get their own quartiles,
+            # like the reference passing the real image w)
+            ordered = column_layout_order(frags, page_width=widths[p])
+            sides = [side for _, side in ordered]
+            n_left = sides.count("left")
+            n_right = sides.count("right")
+            joined = " ".join(f[2] for f, _ in ordered)
+            out.append((
+                mid, p + 1, "double" if n_left and n_right else "single",
+                sides.count("single"), n_left, n_right, joined, len(joined),
+            ))
+        return out
 
-    return media.select("media_id", "payload").mapInPandas(
-        run, PDF_COLUMNS_SCHEMA
-    )
+    return map_rows(media, ("media_id", "payload"), rows, PDF_COLUMNS_SCHEMA)
 
 
 ANY_EXTRACT_SCHEMA = (
@@ -1339,42 +1106,20 @@ def extract_any(media: DataFrame, cfg=None) -> DataFrame:
 
     cfg = cfg or ExtractConfig()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mids, fmts, npg, txt = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                if b.startswith(b"%PDF-"):
-                    try:
-                        _, pages, _, _ = parse_pdf(b)
-                    except PdfError:
-                        continue  # malformed → dropped (counted vs oracle)
-                    text = "\n\n".join(
-                        " ".join(t for _, _, t in reading_order(fr))
-                        for fr in pages
-                    )
-                    fmt, n_pages = "pdf", len(pages)
-                else:
-                    text = extract_page(b, cfg)["text"]
-                    fmt, n_pages = "html", 1
-                mids.append(int(mid))
-                fmts.append(fmt)
-                npg.append(n_pages)
-                txt.append(text)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    "n_pages": pd.Series(npg, dtype="int32"),
-                    "text": pd.Series(txt, dtype="object"),
-                    "n_chars": pd.Series(
-                        [len(t) for t in txt], dtype="int32"
-                    ),
-                }
+    def rows(mid: int, payload: bytes | None) -> tuple[tuple, ...]:
+        b = payload or b""
+        if b.startswith(b"%PDF-"):
+            try:
+                _, pages, _, _ = parse_pdf(b)
+            except PdfError:
+                return ()  # malformed → dropped (counted vs oracle)
+            text = "\n\n".join(
+                " ".join(t for _, _, t in reading_order(fr)) for fr in pages
             )
+            fmt, n_pages = "pdf", len(pages)
+        else:
+            text = extract_page(b, cfg)["text"]
+            fmt, n_pages = "html", 1
+        return ((mid, fmt, n_pages, text, len(text)),)
 
-    return media.select("media_id", "payload").mapInPandas(
-        run, ANY_EXTRACT_SCHEMA
-    )
+    return map_rows(media, ("media_id", "payload"), rows, ANY_EXTRACT_SCHEMA)

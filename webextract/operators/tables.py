@@ -2,7 +2,7 @@
 
 The distributed form of the reference's table pipeline
 (ppstructure/table/predict_table.py:82-106 + matcher.py:99-138): one
-:func:`webextract.operators.extract.map_pages` instance parses each
+:func:`webextract.operators.rows.map_rows` instance parses each
 page's DOM tables and fans out one row per cell. The page text comes
 from the shared front-end :func:`webextract.functions.extract.read_page`,
 so tables see the same capped, decoded text extraction does. Plan shape
@@ -17,6 +17,7 @@ via ``salted_repartition``.
 from __future__ import annotations
 
 from collections.abc import Iterable
+from itertools import repeat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -24,7 +25,7 @@ from pyspark.sql import types as T
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.functions.extract import read_page
 from webextract.functions.tables import parse_tables
-from webextract.operators.extract import map_pages
+from webextract.operators.rows import map_rows
 
 TABLE_CELLS_SCHEMA = T.StructType(
     [
@@ -49,8 +50,8 @@ def table_cells(
     cell_text, is_header, colspan, rowspan), one row per table cell in
     document order. Pages without tables contribute no rows."""
 
-    def rows(raw: bytes | None) -> Iterable[tuple]:
+    def rows(url: str, raw: bytes | None) -> Iterable[tuple]:
         cells = parse_tables(read_page(raw, cfg)[0])
-        return zip(*(cells[c] for c in _CELL_COLS))
+        return zip(repeat(url), *(cells[c] for c in _CELL_COLS))
 
-    return map_pages(pages, rows, TABLE_CELLS_SCHEMA)
+    return map_rows(pages, ("url", "html"), rows, TABLE_CELLS_SCHEMA)
